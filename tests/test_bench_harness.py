@@ -43,8 +43,9 @@ def test_bench_isolates_query_failures(tmp_path, monkeypatch):
     monkeypatch.setattr(bench, "get_spark", keep_alive)
     bench.main()
     # stdout contract (VERDICT r4 item 3): every line is parseable JSON;
-    # the LAST line is a compact clip-proof summary, the one before it the
-    # full result dict, preceded by one terse {"q","s"} line per query.
+    # the LAST line is a compact clip-proof summary. Before it: one terse
+    # {"q","s"} line per query, the full result dict, then the per-query
+    # timings again in {"qchunk","of","t"} lines.
     lines = [json.loads(s) for s in printed]
     compact = lines[-1]
     assert compact["metric"] == "sum_median_sec_all_queries"
@@ -52,7 +53,7 @@ def test_bench_isolates_query_failures(tmp_path, monkeypatch):
     assert compact["n_queries"] == 3
     assert compact["n_err"] == 1
     assert len(json.dumps(compact)) < 400
-    out = lines[-2]
+    (out,) = [d for d in lines if "queries" in d]
     assert out["queries"]["broken"] == "ERR"
     assert "NameError" in out["errors"]["broken"]
     assert isinstance(out["queries"]["ok_one"], float)
@@ -60,6 +61,11 @@ def test_bench_isolates_query_failures(tmp_path, monkeypatch):
     assert out["value"] > 0
     perq = {d["q"]: d["s"] for d in lines[:-2] if "q" in d}
     assert perq == out["queries"]
+    chunked = {}
+    for d in lines:
+        if "qchunk" in d:
+            chunked.update(d["t"])
+    assert chunked == out["queries"]
 
 
 def test_load_anchors_parses_baseline_table():

@@ -148,6 +148,41 @@ def test_full_medallion_run(spark, tmp_path_factory):
     assert total_dep == n_raw
 
 
+def test_bronze_with_file_backed_lookups(spark, tmp_path_factory):
+    """The reference pipeline reads its lookups from files: bronze must
+    enrich and stamp lineage when raw AND both lookups are file scans."""
+    from us_dot_flights_lakehouse_spark.flights.pipeline import (
+        LakehousePaths,
+        run_bronze,
+    )
+    from us_dot_flights_lakehouse_spark.flights.synthetic import (
+        AIRPORTS,
+        CARRIERS,
+    )
+
+    root = str(tmp_path_factory.mktemp("bronze_files"))
+    synthetic_flights(spark, n=50).write.parquet(f"{root}/raw")
+    lookup_schema = "Code string, Description string"
+    spark.createDataFrame(
+        [(str(i), f"{code} airport") for code, i in AIRPORTS], lookup_schema
+    ).write.parquet(f"{root}/airports")
+    spark.createDataFrame(
+        [(c, f"{c} carrier") for c in CARRIERS], lookup_schema
+    ).write.parquet(f"{root}/carriers")
+
+    bronze = run_bronze(
+        spark,
+        spark.read.parquet(f"{root}/raw"),
+        LakehousePaths(f"{root}/lake"),
+        spark.read.parquet(f"{root}/airports"),
+        spark.read.parquet(f"{root}/carriers"),
+    )
+    assert bronze.count() == 50
+    for c in ("ORIGIN_AIRPORT_NAME", "DEST_AIRPORT_NAME", "CARRIER_NAME", "source_file"):
+        assert bronze.filter(F.col(c).isNull()).count() == 0, c
+    assert bronze.filter(~F.col("source_file").contains(f"{root}/raw/")).count() == 0
+
+
 def test_run_pipeline_stage_report_and_resume(spark, tmp_path_factory):
     from us_dot_flights_lakehouse_spark.flights.pipeline import (
         PIPELINE_STAGES,

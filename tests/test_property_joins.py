@@ -156,27 +156,23 @@ def test_char_gini_fold_matches_counter_spec(spark, texts):
     from collections import Counter
 
     from pyspark.sql import functions as F
-    from us_dot_flights_lakehouse_spark.queries.llm import ts_char_gini
+    from us_dot_flights_lakehouse_spark.queries import text_q
 
     # drive the same expression tree through a literal frame
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    import sys as _sys
-
     # rebuild the query's projection against this frame (same code path:
-    # feed via a patched read_corpus in the DEFINING module — since the
-    # round-13 split, the aggregator's attribute is not the one the
-    # function's globals resolve)
-    mod = _sys.modules[ts_char_gini.__module__]
-    orig = mod.read_corpus
-    mod.read_corpus = lambda _s, _d, _t: df
+    # feed via a patched read_corpus in the defining module)
+    orig = text_q.read_corpus
+    text_q.read_corpus = lambda _s, _d, _t: df
     try:
         got = {
-            r["doc_id"]: r for r in ts_char_gini(spark, "ignored").collect()
+            r["doc_id"]: r
+            for r in text_q.ts_char_gini(spark, "ignored").collect()
         }
     finally:
-        mod.read_corpus = orig
+        text_q.read_corpus = orig
     for i, t in enumerate(texts):
         s = re.sub(r"\s+", "", t.lower())
         if not s:  # whitespace-only docs are excluded by contract
@@ -215,17 +211,14 @@ def test_ewma_kernel_matches_python_recurrence(spark, rows):
         (u, base + datetime.timedelta(hours=h), v) for u, h, v in rows
     ]
     df = spark.createDataFrame(data, "user_id long, ts timestamp, value double")
-    import sys as _sys
+    from us_dot_flights_lakehouse_spark.queries import window_q
 
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-
-    mod = _sys.modules[rel.w12_ewma_smoothing.__module__]
-    orig = mod.read_table
-    mod.read_table = lambda _s, _d, _t: df
+    orig = window_q.read_table
+    window_q.read_table = lambda _s, _d, _t: df
     try:
-        out = rel.w12_ewma_smoothing(spark, "ignored").collect()
+        out = window_q.w12_ewma_smoothing(spark, "ignored").collect()
     finally:
-        mod.read_table = orig
+        window_q.read_table = orig
     got = {(r["user_id"], r["hour"]): r["ewma"] for r in out}
     from collections import defaultdict
 

@@ -14,7 +14,6 @@ from bisect import bisect_left, bisect_right
 
 import pytest
 
-from conftest import patch_defining_module
 
 from us_dot_flights_lakehouse_spark.operators.sketches import (
     kll_dumps,
@@ -186,9 +185,7 @@ def test_spark_partial_builder_empty_partitions(spark):
 
 
 def test_a38_catalog_query_nondegenerate(spark, sf_small):
-    from us_dot_flights_lakehouse_spark.queries.relational import (
-        a38_kll_quantile_sketch,
-    )
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import a38_kll_quantile_sketch
 
     rows = a38_kll_quantile_sketch(spark, sf_small).collect()
     assert len(rows) == 3
@@ -338,7 +335,7 @@ def test_mg_builder_rejects_nulls(spark):
 
 
 def test_a39_catalog_query_nondegenerate(spark, sf_small):
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         MG_TOPK,
         a39_mg_topk_sketch,
     )
@@ -360,7 +357,7 @@ def test_a39_catalog_query_nondegenerate(spark, sf_small):
 
 
 def test_w24_catalog_query_nondegenerate(spark, sf_small):
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         MG_TOPK,
         w24_mg_rolling_topk,
     )
@@ -457,7 +454,7 @@ def test_kll_builder_rejects_null_keys(spark):
 
 
 def test_w23_catalog_query_nondegenerate(spark, sf_small):
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         w23_sketch_rolling_quantile,
     )
 
@@ -481,19 +478,6 @@ def test_mg_loads_rejects_undersized_cap():
     assert loaded["counters"] == sk["counters"]
     with pytest.raises(ValueError, match="cap=4"):
         mg_loads(blob, sk["d"], sk["n"], 4)
-
-
-def test_priority_registry_unique_and_resolvable():
-    """ADVICE r10: _PRIORITY must carry no duplicates (hand-counting the
-    driver's head-50 budget depends on it) and every name must resolve."""
-    from us_dot_flights_lakehouse_spark import queries as qreg
-
-    assert len(qreg._PRIORITY) == len(set(qreg._PRIORITY))
-    merged = {}
-    for m in qreg._MODULES:
-        merged.update(m.QUERIES)
-    missing = [n for n in qreg._PRIORITY if n not in merged]
-    assert not missing, f"_PRIORITY names with no implementation: {missing}"
 
 
 # ---------------------------------------------------------------------------
@@ -668,7 +652,7 @@ def test_kmv_builder_rejects_nulls(spark):
 
 
 def test_a40_catalog_query_nondegenerate(spark, sf_small):
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         KMV_K,
         a40_kmv_distinct_sketch,
     )
@@ -684,7 +668,7 @@ def test_a40_catalog_query_nondegenerate(spark, sf_small):
 
 
 def test_w25_catalog_query_nondegenerate(spark, sf_small):
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         KMV_K,
         w25_kmv_rolling_distinct,
     )
@@ -702,9 +686,7 @@ def test_w25_catalog_query_nondegenerate(spark, sf_small):
 
 
 def test_dd_kmv_source_overlap_nondegenerate(spark, sf_small):
-    from us_dot_flights_lakehouse_spark.queries.llm import (
-        dd_kmv_source_overlap,
-    )
+    from us_dot_flights_lakehouse_spark.queries.dedup_q import dd_kmv_source_overlap
 
     rows = dd_kmv_source_overlap(spark, sf_small).collect()
     n_src = {r["src_a"] for r in rows} | {r["src_b"] for r in rows}
@@ -886,7 +868,7 @@ def test_o11_universe_sample_join_consistency(spark, sf_small):
     customer is sampled too (same key universe), so the joined count
     equals the sampled-order count — the property independent row
     sampling lacks — and estimates scale by exactly U_RATE."""
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         U_RATE,
         o11_universe_sample,
     )
@@ -915,9 +897,7 @@ def test_x11_incremental_equals_recompute(spark, sf_small):
     including the exact-decimal revenue."""
     from pyspark.sql import functions as F
 
-    from us_dot_flights_lakehouse_spark.queries.relational import (
-        x11_incremental_mart,
-    )
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import x11_incremental_mart
     from us_dot_flights_lakehouse_spark.sources.readers import read_table
 
     maintained = {
@@ -984,7 +964,7 @@ def test_x12_maintained_blobs_equal_recompute(spark, sf_small, duck):
     import json
     import os
 
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         KMV_K,
         x12_sketch_mart_maintenance,
     )
@@ -1021,7 +1001,7 @@ def test_x12_mart_reused_not_rebuilt(spark, sf_small):
     re-upserting on every call would churn files and bench timings)."""
     import os
 
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         x12_sketch_mart_maintenance,
     )
 
@@ -1040,7 +1020,7 @@ def test_a41_sampled_sketch_scaling(spark, sf_small):
     sketches stay under k (exact branch: samp_est == samp_exact) while
     the full-set sketches overflow (estimator branch), pinning both
     code paths in one result."""
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         KMV_K,
         U_RATE,
         a41_sampled_kmv_crosscheck,
@@ -1065,7 +1045,7 @@ def test_w26_mart_rollup_equals_inline_rollup(spark, sf_small):
     same plan (w25): the write/read boundary is invisible to the
     rollup — the provenance-independence the mergeable-mart design
     promises."""
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         w25_kmv_rolling_distinct,
         w26_mart_rolling_distinct,
     )
@@ -1083,12 +1063,12 @@ def test_x12_rename_race_adopts_committed_winner(spark, sf_small, monkeypatch):
     import os
     import shutil
 
-    from us_dot_flights_lakehouse_spark.queries import relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
 
     out = _x12_mart_path(sf_small)
     # ensure a committed mart exists, then displace it to simulate "their"
     # commit landing between our build and our rename
-    rel._x12_mart(spark, sf_small)
+    sketch_q._x12_mart(spark, sf_small)
     real_rename = os.rename
 
     def failing_rename(src, dst):
@@ -1102,7 +1082,7 @@ def test_x12_rename_race_adopts_committed_winner(spark, sf_small, monkeypatch):
     real_rename(out, keep)  # our run sees no READY mart -> builds
 
     committed = {"done": False}
-    orig_build = rel._x12_build_mart
+    orig_build = sketch_q._x12_build_mart
 
     def build_then_commit(s, orders, path):
         orig_build(s, orders, path)
@@ -1110,9 +1090,9 @@ def test_x12_rename_race_adopts_committed_winner(spark, sf_small, monkeypatch):
         real_rename(keep, out)
         committed["done"] = True
 
-    patch_defining_module(monkeypatch, rel._x12_mart, "_x12_build_mart", build_then_commit)
+    monkeypatch.setattr(sketch_q, "_x12_build_mart", build_then_commit)
     monkeypatch.setattr(os, "rename", failing_rename)
-    got = rel._x12_mart(spark, sf_small)
+    got = sketch_q._x12_mart(spark, sf_small)
     assert committed["done"] and got == out
     assert os.path.isfile(os.path.join(out, "_MART_READY"))
     assert not os.path.exists(f"{out}.tmp.{os.getpid()}")
@@ -1126,7 +1106,7 @@ def test_x12_rename_race_reraises_without_winner(spark, sf_small, monkeypatch):
 
     import pytest
 
-    from us_dot_flights_lakehouse_spark.queries import relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
 
     out = _x12_mart_path(sf_small)
     keep = f"{out}.keep"
@@ -1143,7 +1123,7 @@ def test_x12_rename_race_reraises_without_winner(spark, sf_small, monkeypatch):
     monkeypatch.setattr(os, "rename", failing_rename)
     try:
         with pytest.raises(OSError):
-            rel._x12_mart(spark, sf_small)
+            sketch_q._x12_mart(spark, sf_small)
     finally:
         monkeypatch.undo()
         shutil.rmtree(f"{out}.tmp.{os.getpid()}", ignore_errors=True)
@@ -1158,7 +1138,7 @@ def test_groupby_advisor_branches_and_sizing(spark, sf_small):
     the ceil(est/GROUPS_PER_PART) rule for every row."""
     import math
 
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         ADVISOR_GROUPS_PER_PART,
         KMV_K,
         q_groupby_cardinality_advisor,
@@ -1190,12 +1170,12 @@ def test_join_advisor_estimates_strategy_and_sizing(spark, sf_small):
     recommendations must follow their rules for every edge."""
     import math
 
-    from us_dot_flights_lakehouse_spark.queries.relational import (
+    from us_dot_flights_lakehouse_spark.queries.sketch_q import (
         JOIN_ADV_BROADCAST_ROWS,
         JOIN_ADV_ROWS_PER_PART,
         q_join_cardinality_advisor,
-        read_table,
     )
+    from us_dot_flights_lakehouse_spark.sources.readers import read_table
 
     rows = {
         r["edge"]: r
@@ -1242,9 +1222,10 @@ def test_join_advisor_zero_overlap_edge(spark, sf_small, monkeypatch):
     sketch hash is shared, and the partition floor holds at 1."""
     from pyspark.sql import functions as F
 
-    from us_dot_flights_lakehouse_spark.queries import relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
+    from us_dot_flights_lakehouse_spark.sources import readers
 
-    orig = rel.read_table
+    orig = readers.read_table
 
     def shifted(spark_, sf_dir_, name_):
         df = orig(spark_, sf_dir_, name_)
@@ -1254,10 +1235,10 @@ def test_join_advisor_zero_overlap_edge(spark, sf_small, monkeypatch):
             )
         return df
 
-    patch_defining_module(monkeypatch, rel.q_join_cardinality_advisor, "read_table", shifted)
+    monkeypatch.setattr(sketch_q, "read_table", shifted)
     rows = {
         r["edge"]: r
-        for r in rel.q_join_cardinality_advisor(spark, sf_small).collect()
+        for r in sketch_q.q_join_cardinality_advisor(spark, sf_small).collect()
     }
     r = rows["orders_customer"]
     assert r["exact_overlap"] == 0
@@ -1278,12 +1259,12 @@ def test_x12_markerless_squatter_evicted(spark, sf_small):
     import os
     import shutil
 
-    from us_dot_flights_lakehouse_spark.queries import relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
 
     out = _x12_mart_path(sf_small)
-    rel._x12_mart(spark, sf_small)  # ensure committed
+    sketch_q._x12_mart(spark, sf_small)  # ensure committed
     os.remove(os.path.join(out, "_MART_READY"))  # age the marker out
-    got = rel._x12_mart(spark, sf_small)
+    got = sketch_q._x12_mart(spark, sf_small)
     assert got == out
     assert os.path.isfile(os.path.join(out, "_MART_READY"))
     # the rebuilt mart is complete and readable
@@ -1300,12 +1281,12 @@ def test_kmv_stream_excludes_null_keys_like_count_distinct(spark):
     _kmv_sketch_by chokepoint."""
     from pyspark.sql import functions as F
 
-    from us_dot_flights_lakehouse_spark.queries import relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
 
     rows = [("A", 1), ("A", 2), ("A", None), ("A", None), ("B", None)]
     df = spark.createDataFrame(rows, "g string, k int")
-    hashed = df.select("g", rel._kmv_hash(F.col("k")).alias("h"))
-    got = {r["g"]: r for r in rel._kmv_sketch_by(hashed, "g").collect()}
+    hashed = df.select("g", sketch_q._kmv_hash(F.col("k")).alias("h"))
+    got = {r["g"]: r for r in sketch_q._kmv_sketch_by(hashed, "g").collect()}
     # group A: 2 distinct non-null keys; under-k branch => exact
     assert got["A"]["n_hashes"] == 2
     # group B: only null keys -> no partials at all -> no row (matches
@@ -1320,16 +1301,12 @@ def test_mg_skew_advisor_stream_prunes_null_keys(spark, monkeypatch):
     a 'hot key' row."""
     from pyspark.sql import functions as F
 
-    from conftest import patch_defining_module
-    from us_dot_flights_lakehouse_spark.queries import relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
 
     rows = [(None, 10.0)] * 50 + [(1, 30.0)] * 10 + [(2, 30.0)] * 5
     li = spark.createDataFrame(rows, "l_suppkey bigint, l_quantity double")
-    patch_defining_module(
-        monkeypatch, rel.q_join_skew_advisor, "read_table",
-        lambda s, d, n: li,
-    )
-    out = rel.q_join_skew_advisor(spark, "ignored").collect()
+    monkeypatch.setattr(sketch_q, "read_table", lambda s, d, n: li)
+    out = sketch_q.q_join_skew_advisor(spark, "ignored").collect()
     keys = [r["key"] for r in out]
     assert None not in keys
     # qty<=25 folds onto key 0 (the 50 null-suppkey rows at qty 10);
@@ -1343,13 +1320,13 @@ def test_join_advisor_single_edge_equals_full_run(spark, sf_small):
     row must be bit-identical to that edge's row in the full 4-edge run
     (every output column is a per-edge computation — the j19 seam relies
     on this to skip three tables' scans)."""
-    from us_dot_flights_lakehouse_spark.queries import relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
 
     full = {
         r["edge"]: r
-        for r in rel.q_join_cardinality_advisor(spark, sf_small).collect()
+        for r in sketch_q.q_join_cardinality_advisor(spark, sf_small).collect()
     }
-    one = rel.q_join_cardinality_advisor(
+    one = sketch_q.q_join_cardinality_advisor(
         spark, sf_small, only_edge="orders_customer"
     ).collect()
     assert len(one) == 1
@@ -1363,7 +1340,7 @@ def test_exact_cut_points_bit_equal_to_percentile(spark, sf_small):
     n_total — on real data and on a crafted multiset with heavy ties."""
     from pyspark.sql import functions as F
 
-    from us_dot_flights_lakehouse_spark.queries import relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
     from us_dot_flights_lakehouse_spark.sources.readers import read_table
 
     fracs = [i / 8 for i in range(1, 8)]
@@ -1379,6 +1356,6 @@ def test_exact_cut_points_bit_equal_to_percentile(spark, sf_small):
             F.percentile("v", F.lit(fracs)).alias("cuts"),
             F.count("*").cast("bigint").alias("n_total"),
         ).collect()[0]
-        got = rel._exact_cut_points(spark, vals, fracs).collect()[0]
+        got = sketch_q._exact_cut_points(spark, vals, fracs).collect()[0]
         assert got["n_total"] == ref["n_total"]
         assert list(got["cuts"]) == list(ref["cuts"])

@@ -38,12 +38,12 @@ def _query_modules():
 def _seam(attr: str, fn) -> None:
     """Set read_table/read_corpus across ALL loaded query modules.
 
-    Since the round-13 family split, a query function's globals live in
-    its family module (agg_q, sketch_q, dedup_q, ...), so patching only
-    the aggregator (queries.relational / queries.llm) is a silent no-op:
-    the probe would read the REAL tables on both the 1x and Nx side and
-    report a meaningless 1.0x growth. This seam patches every loaded
-    queries.* module that binds the attribute."""
+    A query function's globals live in its family module (agg_q,
+    sketch_q, dedup_q, ...), so patching any module other than the one
+    that DEFINES a target is a silent no-op: the probe would read the
+    REAL tables on both the 1x and Nx side and report a meaningless 1.0x
+    growth. This seam patches every loaded queries.* module that binds
+    the attribute."""
     for m in _query_modules():
         if hasattr(m, attr):
             setattr(m, attr, fn)
@@ -159,7 +159,7 @@ def main():
     docsN = scaled(spark, "documents", factor, "doc_id").cache()
     docs1.count(); docsN.count()
 
-    from us_dot_flights_lakehouse_spark.queries.llm import (
+    from us_dot_flights_lakehouse_spark.queries.dedup_q import (
         JACCARD_THRESHOLD,
         SIMHASH_MAX_HAMMING,
     )
@@ -574,7 +574,7 @@ def round4_families(spark, docs1, docsN, emb1, embN, factor):
     from us_dot_flights_lakehouse_spark.llm import multimodal
     from us_dot_flights_lakehouse_spark.llm.dedup import containment_pairs
     from us_dot_flights_lakehouse_spark.llm.textstats import text_stats
-    from us_dot_flights_lakehouse_spark.queries.llm import CONTAINMENT_THRESHOLD
+    from us_dot_flights_lakehouse_spark.queries.dedup_q import CONTAINMENT_THRESHOLD
 
     # MIPS: broadcast 20 probes x one corpus scan (query shape)
     def mips(e):
@@ -755,8 +755,15 @@ def round5b_families(spark, factor):
     """Round-5 session-2 shapes at Nx, exercised through the REAL catalog
     query code: scaled tables are injected by monkeypatching the reader
     seam, so the measured plan is exactly the production one."""
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
+    from us_dot_flights_lakehouse_spark.queries import (
+        agg_q,
+        corpus_misc_q,
+        dedup_q,
+        funcs_q,
+        join_q,
+        tokpack_q,
+        window_q,
+    )
     from us_dot_flights_lakehouse_spark.sources import readers
 
     id_cols = {
@@ -781,29 +788,27 @@ def round5b_families(spark, factor):
         return read
 
     targets = [
-        ("w8_rolling_anomaly", rel.w8_rolling_anomaly),
-        ("w12_ewma_smoothing", rel.w12_ewma_smoothing),
-        ("a20_equidepth_histogram", rel.a20_equidepth_histogram),
-        ("a21_pearson_corr", rel.a21_pearson_corr),
-        ("a22_copurchase_lift", rel.a22_copurchase_lift),
-        ("a23_mad_robust_stats", rel.a23_mad_robust_stats),
-        ("p8_winsorize", rel.p8_winsorize),
-        ("p9_standardize", rel.p9_standardize),
-        ("o5_benford_audit", rel.o5_benford_audit),
-        ("o7_id_continuity", rel.o7_id_continuity),
-        ("w11_rank_suite", rel.w11_rank_suite),
-        ("g1_bipartite_rank", rel.g1_bipartite_rank),
-        ("j16_point_in_time_join", llm.j16_point_in_time_join),
-        ("tp_sft_format", llm.tp_sft_format),
-        ("dd_cluster_keep_best", llm.dd_cluster_keep_best),
+        ("w8_rolling_anomaly", window_q.w8_rolling_anomaly),
+        ("w12_ewma_smoothing", window_q.w12_ewma_smoothing),
+        ("a20_equidepth_histogram", agg_q.a20_equidepth_histogram),
+        ("a21_pearson_corr", agg_q.a21_pearson_corr),
+        ("a22_copurchase_lift", agg_q.a22_copurchase_lift),
+        ("a23_mad_robust_stats", agg_q.a23_mad_robust_stats),
+        ("p8_winsorize", funcs_q.p8_winsorize),
+        ("p9_standardize", funcs_q.p9_standardize),
+        ("o5_benford_audit", funcs_q.o5_benford_audit),
+        ("o7_id_continuity", funcs_q.o7_id_continuity),
+        ("w11_rank_suite", window_q.w11_rank_suite),
+        ("g1_bipartite_rank", join_q.g1_bipartite_rank),
+        ("j16_point_in_time_join", corpus_misc_q.j16_point_in_time_join),
+        ("tp_sft_format", tokpack_q.tp_sft_format),
+        ("dd_cluster_keep_best", dedup_q.dd_cluster_keep_best),
     ]
-    orig_rel, orig_llm = rel.read_table, llm.read_table
-    orig_corpus, orig_readers = llm.read_corpus, readers.read_table
+    orig_readers = readers.read_table
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
-                _seam("read_table", scaled_table(f))
                 _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
@@ -825,8 +830,16 @@ def round6_families(spark, factor):
     entropy gates, sampled triangle census, MinHash calibration,
     Holt-Winters kernel, FFD packing, interval-align join, Theil-Sen,
     CUSUM/seasonal, HHI, chi-square, conversation lint, drift audit."""
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
+    from us_dot_flights_lakehouse_spark.queries import (
+        agg_q,
+        corpus_misc_q,
+        dedup_q,
+        join_q,
+        mm_q,
+        text_q,
+        tokpack_q,
+        window_q,
+    )
 
     id_cols = {
         "events": "event_id",
@@ -855,33 +868,31 @@ def round6_families(spark, factor):
         return read
 
     targets = [
-        ("dd_exact_substr", llm.dd_exact_substr),
-        ("dd_span_dedup_apply", llm.dd_span_dedup_apply),
-        ("ts_entropy_gates", llm.ts_entropy_gates),
-        ("dd_minhash_calibration", llm.dd_minhash_calibration),
-        ("tp_pack_bestfit", llm.tp_pack_bestfit),
-        ("tp_chat_lint", llm.tp_chat_lint),
-        ("q_schema_drift", llm.q_schema_drift),
-        ("ts_zipf_audit", llm.ts_zipf_audit),
-        ("tp_loss_masking", llm.tp_loss_masking),
-        ("mm_exif_strip", llm.mm_exif_strip),
-        ("o8_reservoir_sample", llm.o8_reservoir_sample),
-        ("ts_source_containment", llm.ts_source_containment),
-        ("g2_triangle_count", rel.g2_triangle_count),
-        ("w17_holt_winters", rel.w17_holt_winters),
-        ("j17_interval_align", rel.j17_interval_align),
-        ("a24_theil_sen", rel.a24_theil_sen),
-        ("a25_hhi_concentration", rel.a25_hhi_concentration),
-        ("a26_chi2_independence", rel.a26_chi2_independence),
-        ("w15_changepoint_cusum", rel.w15_changepoint_cusum),
-        ("w16_seasonal_decompose", rel.w16_seasonal_decompose),
+        ("dd_exact_substr", dedup_q.dd_exact_substr),
+        ("dd_span_dedup_apply", dedup_q.dd_span_dedup_apply),
+        ("ts_entropy_gates", text_q.ts_entropy_gates),
+        ("dd_minhash_calibration", dedup_q.dd_minhash_calibration),
+        ("tp_pack_bestfit", tokpack_q.tp_pack_bestfit),
+        ("tp_chat_lint", tokpack_q.tp_chat_lint),
+        ("q_schema_drift", corpus_misc_q.q_schema_drift),
+        ("ts_zipf_audit", text_q.ts_zipf_audit),
+        ("tp_loss_masking", tokpack_q.tp_loss_masking),
+        ("mm_exif_strip", mm_q.mm_exif_strip),
+        ("o8_reservoir_sample", corpus_misc_q.o8_reservoir_sample),
+        ("ts_source_containment", text_q.ts_source_containment),
+        ("g2_triangle_count", join_q.g2_triangle_count),
+        ("w17_holt_winters", window_q.w17_holt_winters),
+        ("j17_interval_align", join_q.j17_interval_align),
+        ("a24_theil_sen", agg_q.a24_theil_sen),
+        ("a25_hhi_concentration", agg_q.a25_hhi_concentration),
+        ("a26_chi2_independence", agg_q.a26_chi2_independence),
+        ("w15_changepoint_cusum", window_q.w15_changepoint_cusum),
+        ("w16_seasonal_decompose", window_q.w16_seasonal_decompose),
     ]
-    orig_rel, orig_llm, orig_corpus = rel.read_table, llm.read_table, llm.read_corpus
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
-                _seam("read_table", scaled_table(f))
                 _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
@@ -903,9 +914,17 @@ def round6b_families(spark, factor):
     reconciliation, dedup pipeline verdict + source report + threshold
     sweep, anomaly ensemble, windowed top-k, audio normalize audit,
     CSV quarantine."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
+    from us_dot_flights_lakehouse_spark.queries import (
+        agg_q,
+        audit_q,
+        dedup_q,
+        funcs_q,
+        mm_q,
+        sim_q,
+        tokpack_q,
+        window_q,
+    )
     import us_dot_flights_lakehouse_spark.queries.quality as qual
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
     import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
@@ -935,43 +954,33 @@ def round6b_families(spark, factor):
 
     targets = [
         ("q_table_stats_approx", qual.q_table_stats_approx),
-        ("dd_incremental_minhash", llm.dd_incremental_minhash),
-        ("sim_cur_decomposition", llm.sim_cur_decomposition),
-        ("sim_ndcg_eval", llm.sim_ndcg_eval),
-        ("sim_matryoshka_truncation", llm.sim_matryoshka_truncation),
-        ("tp_annotation_agreement", llm.tp_annotation_agreement),
-        ("sim_power_iteration", llm.sim_power_iteration),
-        ("tp_preference_pairs", llm.tp_preference_pairs),
-        ("a27_bootstrap_ci", rel.a27_bootstrap_ci),
-        ("q_order_reconciliation", rel.q_order_reconciliation),
-        ("dd_pipeline_verdict", llm.dd_pipeline_verdict),
-        ("tp_packing_efficiency", llm.tp_packing_efficiency),
-        ("sim_fisher_separability", llm.sim_fisher_separability),
-        ("w18_anomaly_ensemble", rel.w18_anomaly_ensemble),
+        ("dd_incremental_minhash", dedup_q.dd_incremental_minhash),
+        ("sim_cur_decomposition", sim_q.sim_cur_decomposition),
+        ("sim_ndcg_eval", sim_q.sim_ndcg_eval),
+        ("sim_matryoshka_truncation", sim_q.sim_matryoshka_truncation),
+        ("tp_annotation_agreement", tokpack_q.tp_annotation_agreement),
+        ("sim_power_iteration", sim_q.sim_power_iteration),
+        ("tp_preference_pairs", tokpack_q.tp_preference_pairs),
+        ("a27_bootstrap_ci", agg_q.a27_bootstrap_ci),
+        ("q_order_reconciliation", audit_q.q_order_reconciliation),
+        ("dd_pipeline_verdict", dedup_q.dd_pipeline_verdict),
+        ("tp_packing_efficiency", tokpack_q.tp_packing_efficiency),
+        ("sim_fisher_separability", sim_q.sim_fisher_separability),
+        ("w18_anomaly_ensemble", window_q.w18_anomaly_ensemble),
         ("st_windowed_topk", st.st_windowed_topk),
-        ("sim_intrinsic_dimension", llm.sim_intrinsic_dimension),
-        ("dd_source_dedup_report", llm.dd_source_dedup_report),
-        ("mm_audio_normalize_audit", llm.mm_audio_normalize_audit),
-        ("tp_bpe_merge_step", llm.tp_bpe_merge_step),
-        ("dd_threshold_sweep", llm.dd_threshold_sweep),
-        ("src_csv_badrecords", rel.src_csv_badrecords),
+        ("sim_intrinsic_dimension", sim_q.sim_intrinsic_dimension),
+        ("dd_source_dedup_report", dedup_q.dd_source_dedup_report),
+        ("mm_audio_normalize_audit", mm_q.mm_audio_normalize_audit),
+        ("tp_bpe_merge_step", tokpack_q.tp_bpe_merge_step),
+        ("dd_threshold_sweep", dedup_q.dd_threshold_sweep),
+        ("src_csv_badrecords", funcs_q.src_csv_badrecords),
     ]
-    origs = (
-        rel.read_table,
-        llm.read_table,
-        llm.read_corpus,
-        qual.read_table,
-        st.read_table,
-    )
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -979,13 +988,7 @@ def round6b_families(spark, factor):
                 flush=True,
             )
     finally:
-        (
-            rel.read_table,
-            llm.read_table,
-            llm.read_corpus,
-            qual.read_table,
-            st.read_table,
-        ) = origs
+        _seam_restore()
 
 
 def round6c_families(spark, factor):
@@ -994,9 +997,15 @@ def round6c_families(spark, factor):
     k-core peel, Mann-Whitney AUC, Heaps' law, LSH recall lift,
     attribution, freshness SLA, Gini, IVF drift, Neyman allocation,
     incremental MinHash probe."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.quality as qual
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.queries import (
+        agg_q,
+        audit_q,
+        join_q,
+        sim_q,
+        text_q,
+        tokpack_q,
+        window_q,
+    )
 
     id_cols = {
         "events": "event_id",
@@ -1024,27 +1033,24 @@ def round6c_families(spark, factor):
         return read
 
     targets = [
-        ("w19_autocorrelation", rel.w19_autocorrelation),
-        ("a28_mutual_information", rel.a28_mutual_information),
-        ("g3_kcore_decompose", rel.g3_kcore_decompose),
-        ("tp_ranker_auc", llm.tp_ranker_auc),
-        ("ts_heaps_law", llm.ts_heaps_law),
-        ("sim_lsh_recall_audit", llm.sim_lsh_recall_audit),
-        ("w20_attribution", rel.w20_attribution),
-        ("q_freshness_audit", rel.q_freshness_audit),
-        ("a29_nation_gini", rel.a29_nation_gini),
-        ("sim_index_drift", llm.sim_index_drift),
-        ("tp_neyman_allocation", llm.tp_neyman_allocation),
+        ("w19_autocorrelation", window_q.w19_autocorrelation),
+        ("a28_mutual_information", agg_q.a28_mutual_information),
+        ("g3_kcore_decompose", join_q.g3_kcore_decompose),
+        ("tp_ranker_auc", tokpack_q.tp_ranker_auc),
+        ("ts_heaps_law", text_q.ts_heaps_law),
+        ("sim_lsh_recall_audit", sim_q.sim_lsh_recall_audit),
+        ("w20_attribution", window_q.w20_attribution),
+        ("q_freshness_audit", audit_q.q_freshness_audit),
+        ("a29_nation_gini", agg_q.a29_nation_gini),
+        ("sim_index_drift", sim_q.sim_index_drift),
+        ("tp_neyman_allocation", tokpack_q.tp_neyman_allocation),
     ]
-    origs = (rel.read_table, llm.read_table, llm.read_corpus, qual.read_table)
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1061,8 +1067,15 @@ def round6d_families(spark, factor):
     assignment. (x8/x9 are excluded: their write-once fixtures would be
     reused across factors, making the ratio meaningless — their scaling
     shapes are the already-stressed full-outer diff and bucketed join.)"""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.queries import (
+        agg_q,
+        audit_q,
+        dedup_q,
+        funcs_q,
+        join_q,
+        mm_q,
+        text_q,
+    )
     import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
@@ -1091,28 +1104,25 @@ def round6d_families(spark, factor):
         return read
 
     targets = [
-        ("dd_lsh_tuning_curve", llm.dd_lsh_tuning_curve),
-        ("mm_scene_cuts", llm.mm_scene_cuts),
-        ("ts_ttr_diversity", llm.ts_ttr_diversity),
-        ("ts_quality_classifier", llm.ts_quality_classifier),
-        ("a30_weighted_median", rel.a30_weighted_median),
+        ("dd_lsh_tuning_curve", dedup_q.dd_lsh_tuning_curve),
+        ("mm_scene_cuts", mm_q.mm_scene_cuts),
+        ("ts_ttr_diversity", text_q.ts_ttr_diversity),
+        ("ts_quality_classifier", text_q.ts_quality_classifier),
+        ("a30_weighted_median", agg_q.a30_weighted_median),
         ("st_windowed_cardinality", st.st_windowed_cardinality),
-        ("o9_dense_rank_ids", rel.o9_dense_rank_ids),
-        ("q_skew_report", rel.q_skew_report),
-        ("g4_label_propagation", rel.g4_label_propagation),
-        ("a31_ks_drift", rel.a31_ks_drift),
-        ("mm_frame_dedup", llm.mm_frame_dedup),
-        ("dd_incremental_clusters", llm.dd_incremental_clusters),
+        ("o9_dense_rank_ids", funcs_q.o9_dense_rank_ids),
+        ("q_skew_report", audit_q.q_skew_report),
+        ("g4_label_propagation", join_q.g4_label_propagation),
+        ("a31_ks_drift", agg_q.a31_ks_drift),
+        ("mm_frame_dedup", mm_q.mm_frame_dedup),
+        ("dd_incremental_clusters", dedup_q.dd_incremental_clusters),
     ]
-    origs = (rel.read_table, llm.read_table, llm.read_corpus, st.read_table)
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1251,7 +1261,8 @@ def round12_families(spark, factor, only_target=None):
     import shutil
     import tempfile
 
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.queries import sketch_q
+    from us_dot_flights_lakehouse_spark.sources import readers
 
     cache = {}
 
@@ -1266,7 +1277,7 @@ def round12_families(spark, factor, only_target=None):
     run_jadv = only_target in (None, "q_join_cardinality_advisor")
     if not (run_a41 or run_build or run_jadv):
         sys.exit(f"unknown round12 target {only_target!r}")
-    orig_rel = rel.read_table
+    orig_rel = readers.read_table
     try:
         if run_a41:
             times = []
@@ -1277,7 +1288,7 @@ def round12_families(spark, factor, only_target=None):
                 times.append(
                     timed(
                         f"a41_sampled_kmv_crosscheck@{f}x",
-                        rel.a41_sampled_kmv_crosscheck(spark, SF_DIR),
+                        sketch_q.a41_sampled_kmv_crosscheck(spark, SF_DIR),
                     )
                 )
             print(
@@ -1304,7 +1315,7 @@ def round12_families(spark, factor, only_target=None):
                 li_cache[f].count()
             return li_cache[f]
 
-        orig = rel.read_table
+        orig = readers.read_table
         try:
             times = []
             for f in (1, factor):
@@ -1318,7 +1329,7 @@ def round12_families(spark, factor, only_target=None):
                 times.append(
                     timed(
                         f"q_join_cardinality_advisor@{f}x",
-                        rel.q_join_cardinality_advisor(spark, SF_DIR),
+                        sketch_q.q_join_cardinality_advisor(spark, SF_DIR),
                     )
                 )
             print(
@@ -1334,7 +1345,7 @@ def round12_families(spark, factor, only_target=None):
             path = f"{tempfile.gettempdir()}/us_dot_x12stress_{f}x"
             shutil.rmtree(path, ignore_errors=True)
             t0 = time.perf_counter()
-            rel._x12_build_mart(spark, scaled_orders(f), path)
+            sketch_q._x12_build_mart(spark, scaled_orders(f), path)
             t = time.perf_counter() - t0
             print(f"x12_build@{f}x: {t:.2f}s", flush=True)
             times.append(t)
@@ -1366,8 +1377,12 @@ def round10_families(spark, factor, only_target=None):
     - g1/g5 graph expansions grow with edge count x neighborhood size;
     - the sketch queries must stay ~linear (partials are cap-bounded;
       only the exact-companion CHECK is row-scale)."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.queries import (
+        dedup_q,
+        join_q,
+        sketch_q,
+        window_q,
+    )
     import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
@@ -1396,35 +1411,31 @@ def round10_families(spark, factor, only_target=None):
         return read
 
     targets = [
-        ("a38_kll_quantile_sketch", rel.a38_kll_quantile_sketch),
-        ("a39_mg_topk_sketch", rel.a39_mg_topk_sketch),
-        ("w23_sketch_rolling_quantile", rel.w23_sketch_rolling_quantile),
-        ("w24_mg_rolling_topk", rel.w24_mg_rolling_topk),
+        ("a38_kll_quantile_sketch", sketch_q.a38_kll_quantile_sketch),
+        ("a39_mg_topk_sketch", sketch_q.a39_mg_topk_sketch),
+        ("w23_sketch_rolling_quantile", sketch_q.w23_sketch_rolling_quantile),
+        ("w24_mg_rolling_topk", sketch_q.w24_mg_rolling_topk),
         ("st_windowed_quantile_sketch", st.st_windowed_quantile_sketch),
-        ("a40_kmv_distinct_sketch", rel.a40_kmv_distinct_sketch),
-        ("w25_kmv_rolling_distinct", rel.w25_kmv_rolling_distinct),
-        ("dd_kmv_source_overlap", llm.dd_kmv_source_overlap),
-        ("w8_rolling_anomaly", rel.w8_rolling_anomaly),
-        ("g1_bipartite_rank", rel.g1_bipartite_rank),
-        ("g5_neighbor_overlap", rel.g5_neighbor_overlap),
-        ("dd_minhash_lsh", llm.dd_minhash_lsh),
-        ("dd_cluster_keep_best", llm.dd_cluster_keep_best),
-        ("dd_incremental_clusters", llm.dd_incremental_clusters),
+        ("a40_kmv_distinct_sketch", sketch_q.a40_kmv_distinct_sketch),
+        ("w25_kmv_rolling_distinct", sketch_q.w25_kmv_rolling_distinct),
+        ("dd_kmv_source_overlap", dedup_q.dd_kmv_source_overlap),
+        ("w8_rolling_anomaly", window_q.w8_rolling_anomaly),
+        ("g1_bipartite_rank", join_q.g1_bipartite_rank),
+        ("g5_neighbor_overlap", join_q.g5_neighbor_overlap),
+        ("dd_minhash_lsh", dedup_q.dd_minhash_lsh),
+        ("dd_cluster_keep_best", dedup_q.dd_cluster_keep_best),
+        ("dd_incremental_clusters", dedup_q.dd_incremental_clusters),
     ]
     if only_target:
         targets = [(n, f) for n, f in targets if n == only_target]
         if not targets:
             sys.exit(f"unknown round10 target {only_target!r}")
-    orig_rel, orig_llm, orig_corpus = rel.read_table, llm.read_table, llm.read_corpus
-    orig_st = st.read_table
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1452,8 +1463,14 @@ def round7_families(spark, factor):
     source by content fingerprint, so a scaled reader would silently
     reuse 1x data; their scan-side scale behavior is the plain
     partitioned/xml reader path covered by S-family stress."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.queries import (
+        agg_q,
+        dedup_q,
+        funcs_q,
+        join_q,
+        mm_q,
+        tokpack_q,
+    )
     import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
@@ -1482,29 +1499,25 @@ def round7_families(spark, factor):
         return read
 
     targets = [
-        ("a32_wasserstein_drift", rel.a32_wasserstein_drift),
-        ("a33_welch_t_drift", rel.a33_welch_t_drift),
-        ("j18_salted_skew_join", rel.j18_salted_skew_join),
-        ("o10_systematic_sample", rel.o10_systematic_sample),
-        ("a34_cramers_v", rel.a34_cramers_v),
-        ("g5_neighbor_overlap", rel.g5_neighbor_overlap),
-        ("dd_soft_dedup_weights", llm.dd_soft_dedup_weights),
-        ("tp_context_truncation", llm.tp_context_truncation),
-        ("tp_dedup_aware_mixture", llm.tp_dedup_aware_mixture),
-        ("dd_incremental_span_probe", llm.dd_incremental_span_probe),
-        ("mm_hist_equalize", llm.mm_hist_equalize),
+        ("a32_wasserstein_drift", agg_q.a32_wasserstein_drift),
+        ("a33_welch_t_drift", agg_q.a33_welch_t_drift),
+        ("j18_salted_skew_join", join_q.j18_salted_skew_join),
+        ("o10_systematic_sample", funcs_q.o10_systematic_sample),
+        ("a34_cramers_v", agg_q.a34_cramers_v),
+        ("g5_neighbor_overlap", join_q.g5_neighbor_overlap),
+        ("dd_soft_dedup_weights", dedup_q.dd_soft_dedup_weights),
+        ("tp_context_truncation", tokpack_q.tp_context_truncation),
+        ("tp_dedup_aware_mixture", tokpack_q.tp_dedup_aware_mixture),
+        ("dd_incremental_span_probe", dedup_q.dd_incremental_span_probe),
+        ("mm_hist_equalize", mm_q.mm_hist_equalize),
         ("st_event_rate_alerts", st.st_event_rate_alerts),
     ]
-    orig_rel, orig_llm, orig_corpus = rel.read_table, llm.read_table, llm.read_corpus
-    orig_st = st.read_table
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1520,9 +1533,14 @@ def round7b_families(spark, factor):
     p90 band, PK audit, period-over-period, boilerplate report, new-user
     rate, composed sample weights, SQL UDF, parameterized SQL,
     partitioned UDTF, boxplot profile, silence gaps."""
-    import us_dot_flights_lakehouse_spark.queries.llm as llm
+    from us_dot_flights_lakehouse_spark.queries import (
+        agg_q,
+        funcs_q,
+        text_q,
+        tokpack_q,
+        window_q,
+    )
     import us_dot_flights_lakehouse_spark.queries.quality as qual
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
     import us_dot_flights_lakehouse_spark.queries.streaming as st
 
     id_cols = {
@@ -1551,31 +1569,26 @@ def round7b_families(spark, factor):
         return read
 
     targets = [
-        ("a35_quantile_drift", rel.a35_quantile_drift),
-        ("ts_code_detect", llm.ts_code_detect),
-        ("w21_rolling_quantile", rel.w21_rolling_quantile),
+        ("a35_quantile_drift", agg_q.a35_quantile_drift),
+        ("ts_code_detect", text_q.ts_code_detect),
+        ("w21_rolling_quantile", window_q.w21_rolling_quantile),
         ("q_pk_uniqueness_audit", qual.q_pk_uniqueness_audit),
-        ("w22_period_over_period", rel.w22_period_over_period),
-        ("ts_boilerplate_lines", llm.ts_boilerplate_lines),
+        ("w22_period_over_period", window_q.w22_period_over_period),
+        ("ts_boilerplate_lines", text_q.ts_boilerplate_lines),
         ("st_new_user_rate", st.st_new_user_rate),
-        ("tp_final_sample_weights", llm.tp_final_sample_weights),
-        ("f_sql_udf", rel.f_sql_udf),
-        ("f_param_sql", rel.f_param_sql),
-        ("f_udtf_partitioned", rel.f_udtf_partitioned),
-        ("a36_boxplot_profile", rel.a36_boxplot_profile),
+        ("tp_final_sample_weights", tokpack_q.tp_final_sample_weights),
+        ("f_sql_udf", funcs_q.f_sql_udf),
+        ("f_param_sql", funcs_q.f_param_sql),
+        ("f_udtf_partitioned", funcs_q.f_udtf_partitioned),
+        ("a36_boxplot_profile", agg_q.a36_boxplot_profile),
         ("st_silence_gaps", st.st_silence_gaps),
     ]
-    orig_rel, orig_llm, orig_corpus = rel.read_table, llm.read_table, llm.read_corpus
-    orig_st, orig_qual = st.read_table, qual.read_table
     try:
         for name, fn in targets:
             times = []
             for f in (1, factor):
                 _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 _seam("read_corpus", scaled_table(f))
-                _seam("read_table", scaled_table(f))
-                _seam("read_table", scaled_table(f))
                 t = timed(f"{name}@{f}x", fn(spark, SF_DIR))
                 times.append(t)
             print(
@@ -1605,7 +1618,8 @@ def round13_families(spark, factor, only_target=None):
       advisor table (4 edges, sketch path linear) + the advised join
       itself (broadcast at 1x right side). Expected ~linear.
     """
-    import us_dot_flights_lakehouse_spark.queries.relational as rel
+    from us_dot_flights_lakehouse_spark.sources import readers
+    from us_dot_flights_lakehouse_spark.queries import queries
 
     cache = {}
 
@@ -1635,11 +1649,11 @@ def round13_families(spark, factor, only_target=None):
     run = [t for t in targets if only_target in (None, t)]
     if not run:
         sys.exit(f"unknown round13 target {only_target!r}")
-    orig = rel.read_table
+    orig = readers.read_table
     try:
         for name in run:
             scaled_names = targets[name]
-            fn = getattr(rel, name)
+            fn = queries()[name]
             # untimed warmup at 1x: JVM/codegen/parquet-footer costs
             # otherwise inflate the 1x reading and UNDERSTATE growth
             _seam_restore()

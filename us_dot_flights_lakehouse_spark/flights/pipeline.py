@@ -83,8 +83,10 @@ def run_bronze(
 ) -> DataFrame:
     """Bronze: lookup enrichment (two aliased joins of ONE airport lookup +
     carrier lookup, all broadcast — reference download_and_ingest.py:134-155)
-    + lineage columns + partitioned write."""
-    df = raw
+    + lineage columns + partitioned write. Lineage is stamped on ``raw``
+    before the joins: ``input_file_name()`` cannot resolve over a join of
+    several file scans (file-backed lookups)."""
+    df = with_lineage(raw, partition_date_col="FL_DATE")
     if airport_lookup is not None:
         o = airport_lookup.alias("o")
         d = airport_lookup.alias("d")
@@ -114,7 +116,6 @@ def run_bronze(
             .withColumnRenamed("Description", "CARRIER_NAME")
             .drop("Code")
         )
-    df = with_lineage(df, partition_date_col="FL_DATE")
     bronze_quality_suite().validate(df, fail_closed=False)
     write_partitioned(df, paths.bronze, partition_by=["partition_date"], dynamic=True)
     return spark.read.parquet(paths.bronze)

@@ -213,7 +213,7 @@ IVF_TRAIN_CAP = 10_000
 def train_centroids(train, nlist: int, seed: int = 42):
     """Seeded numpy Lloyd's over a float64 training matrix — the ONE
     k-means implementation shared by the Spark query and the DuckDB
-    oracle builder (queries/llm._ivf_oracle), so both derive bitwise-
+    oracle builder (queries/sim_q._ivf_oracle), so both derive bitwise-
     identical centroids from the same training rows."""
     import numpy as np
 

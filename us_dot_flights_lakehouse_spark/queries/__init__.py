@@ -1,8 +1,10 @@
 """Query registry — the driver-facing catalog of implemented operators.
 
-Each entry pairs a Spark DataFrame builder ``(spark, sf_dir) -> DataFrame``
-with (where SQL-expressible) an equivalent ANSI-SQL oracle string for DuckDB
-over the same parquet tables. ``__spark_entry__.py`` exposes this registry.
+``_CATALOG`` pairs every Spark DataFrame builder ``(spark, sf_dir) ->
+DataFrame`` with its DuckDB oracle over the same parquet tables: an ANSI-SQL
+string, or a zero-argument callable that builds the string from the data
+(see ``oracle_sql``). The registry key is the builder's ``__name__``.
+``__spark_entry__.py`` exposes this registry.
 
 Determinism contract (why results hash-match the oracle bit-for-bit):
 - money-like SUMs go through exact DECIMAL accumulation, surfaced as DOUBLE
@@ -23,14 +25,348 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from us_dot_flights_lakehouse_spark.queries import (
+    agg_q,
+    audit_q,
+    corpus_misc_q,
+    dedup_q,
     flights,
-    llm,
+    funcs_q,
+    join_q,
+    llm_shared,
+    mm_q,
     quality,
-    relational,
+    sim_q,
+    sketch_q,
     streaming,
+    text_q,
+    tokpack_q,
+    window_q,
 )
 
-_MODULES = (llm, streaming, quality, flights, relational)
+#: builder -> oracle, one line per query. The order is the registry order
+#: below the ``_PRIORITY`` fold. Oracles written as calls are evaluated
+#: here, at import.
+_CATALOG = {
+    text_q.ts_entropy_gates: text_q._ts_entropy_oracle,
+    corpus_misc_q.o8_reservoir_sample: corpus_misc_q.O8_RESERVOIR_ORACLE,
+    tokpack_q.tp_pack_bestfit: tokpack_q._tp_pack_bestfit_oracle,
+    mm_q.mm_exif_strip: mm_q.MM_EXIF_ORACLE,
+    sim_q.sim_cur_decomposition: sim_q.SIM_CUR_ORACLE,
+    dedup_q.dd_minhash_calibration: dedup_q._minhash_cal_oracle,
+    sim_q.sim_matryoshka_truncation: sim_q._matryoshka_oracle,
+    tokpack_q.tp_annotation_agreement: tokpack_q.TP_KAPPA_ORACLE,
+    sim_q.sim_power_iteration: sim_q._power_iteration_oracle,
+    tokpack_q.tp_preference_pairs: tokpack_q.TP_PREF_ORACLE,
+    dedup_q.dd_pipeline_verdict: dedup_q._dd_pipeline_oracle,
+    tokpack_q.tp_packing_efficiency: tokpack_q._tp_packing_eff_oracle,
+    sim_q.sim_intrinsic_dimension: sim_q.SIM_INTRINSIC_ORACLE,
+    mm_q.mm_audio_normalize_audit: mm_q.MM_AUDIO_NORM_ORACLE,
+    tokpack_q.tp_bpe_merge_step: tokpack_q._bpe_step_oracle,
+    dedup_q.dd_threshold_sweep: dedup_q._dd_sweep_oracle,
+    dedup_q.dd_soft_dedup_weights: dedup_q.DD_SOFT_DEDUP_ORACLE,
+    tokpack_q.tp_context_truncation: tokpack_q.TP_TRUNCATION_ORACLE,
+    tokpack_q.tp_dedup_aware_mixture: tokpack_q.TP_DEDUP_MIX_ORACLE,
+    corpus_misc_q.src_xml_roundtrip: corpus_misc_q.SRC_XML_ORACLE,
+    dedup_q.dd_kmv_source_overlap: dedup_q.DD_KMV_OVERLAP_ORACLE,
+    mm_q.mm_hist_equalize: mm_q.MM_HIST_EQ_ORACLE,
+    dedup_q.dd_incremental_span_probe: dedup_q.DD_INCR_SPAN_ORACLE,
+    text_q.ts_code_detect: text_q.TS_CODE_DETECT_ORACLE,
+    text_q.ts_boilerplate_lines: text_q.TS_BOILERPLATE_ORACLE,
+    dedup_q.dd_corpus_snapshot_diff: dedup_q.DD_CORPUS_DIFF_ORACLE,
+    dedup_q.dd_shingle_df_profile: dedup_q.DD_SHINGLE_DF_ORACLE,
+    sim_q.sim_distance_histogram: sim_q.SIM_DIST_HIST_ORACLE,
+    tokpack_q.tp_final_sample_weights: tokpack_q.TP_FINAL_WEIGHTS_ORACLE,
+    dedup_q.dd_source_dedup_report: dedup_q._dd_source_report_oracle,
+    sim_q.sim_fisher_separability: sim_q.SIM_FISHER_ORACLE,
+    text_q.ts_zipf_audit: text_q.TS_ZIPF_ORACLE,
+    tokpack_q.tp_loss_masking: tokpack_q.TP_LOSS_MASK_ORACLE,
+    sim_q.sim_ndcg_eval: sim_q._ndcg_oracle,
+    text_q.ts_source_containment: text_q.TS_SRC_CONTAIN_ORACLE,
+    corpus_misc_q.q_schema_drift: corpus_misc_q.Q_SCHEMA_DRIFT_ORACLE,
+    tokpack_q.tp_chat_lint: tokpack_q.TP_CHAT_LINT_ORACLE,
+    dedup_q.dd_exact_substr: dedup_q._dd_exact_substr_oracle,
+    dedup_q.dd_span_dedup_apply: dedup_q._dd_span_apply_oracle,
+    dedup_q.dd_exact_dedup: dedup_q.DD_EXACT_ORACLE,
+    dedup_q.dd_ngram_jaccard: dedup_q.DD_NGRAM_ORACLE,
+    dedup_q.dd_containment: dedup_q.DD_CONTAIN_ORACLE,
+    dedup_q.dd_minhash_lsh: dedup_q.DD_MINHASH_ORACLE,
+    dedup_q.dd_simhash_values: dedup_q._simhash_oracle(),
+    dedup_q.dd_simhash_pairs: dedup_q._simhash_pairs_oracle(),
+    dedup_q.dd_embedding_neardup: dedup_q.DD_EMB_ORACLE,
+    sim_q.sim_topk_cosine: sim_q.SIM_TOPK_ORACLE,
+    sim_q.sim_hard_negatives: sim_q.SIM_HARDNEG_ORACLE,
+    sim_q.sim_mips_topk: sim_q.SIM_MIPS_ORACLE,
+    tokpack_q.tp_label_balance: tokpack_q.TP_BALANCE_ORACLE,
+    sim_q.sim_lsh_topk: sim_q.SIM_LSH_ORACLE,
+    sim_q.sim_lsh_multiprobe: sim_q.SIM_LSH_MP_ORACLE,
+    sim_q.sim_ivf_topk: sim_q._ivf_oracle,
+    sim_q.sim_pq_topk: sim_q._pq_oracle,
+    sim_q.sim_random_projection: sim_q._rp_oracle,
+    sim_q.sim_quantize_int8: sim_q.SIM_QUANT_ORACLE,
+    text_q.ts_text_stats: text_q.TS_STATS_ORACLE,
+    text_q.ts_lang_id: text_q._lang_oracle(),
+    tokpack_q.tp_corpus_curation: tokpack_q._curation_oracle(),
+    mm_q.mm_media_manifest: mm_q._mm_manifest_oracle(),
+    mm_q.mm_byte_features: mm_q.MM_BYTES_ORACLE,
+    mm_q.mm_image_dims: mm_q.MM_DIMS_ORACLE,
+    mm_q.mm_pixel_stats: mm_q.MM_PIXEL_ORACLE,
+    mm_q.mm_jpeg_roundtrip: mm_q.MM_JPEG_ORACLE,
+    mm_q.mm_image_resize: mm_q.MM_RESIZE_ORACLE,
+    mm_q.mm_image_crop: mm_q.MM_CROP_ORACLE,
+    mm_q.mm_image_augment: mm_q.MM_AUGMENT_ORACLE,
+    mm_q.mm_frame_stats: mm_q.MM_FRAME_ORACLE,
+    mm_q.mm_video_motion: mm_q.MM_MOTION_ORACLE,
+    mm_q.mm_scene_cuts: mm_q.MM_SCENE_CUTS_ORACLE,
+    mm_q.mm_frame_dedup: mm_q._frame_dedup_oracle(),
+    mm_q.mm_audio_resample: mm_q.MM_RESAMPLE_ORACLE,
+    mm_q.mm_mjpeg_frame_stats: mm_q.MM_MJPEG_ORACLE,
+    corpus_misc_q.src_wds_roundtrip: corpus_misc_q.SRC_WDS_ORACLE,
+    corpus_misc_q.src_jsonl_roundtrip: corpus_misc_q.SRC_JSONL_ORACLE,
+    corpus_misc_q.src_orc_roundtrip: corpus_misc_q.SRC_ORC_ORACLE,
+    text_q.ts_heavy_hitters: text_q.TS_HH_ORACLE,
+    tokpack_q.tp_incremental_dedup: tokpack_q.TP_INCR_ORACLE,
+    tokpack_q.tp_bloom_incremental_dedup: tokpack_q.TP_INCR_ORACLE,
+    dedup_q.dd_incremental_minhash: dedup_q._dd_incr_minhash_oracle(),
+    dedup_q.dd_incremental_clusters: llm_shared.DD_INCR_CLUSTERS_ORACLE.format(
+        minhash_pairs=dedup_q.DD_MINHASH_ORACLE
+    ),
+    tokpack_q.tp_ranker_auc: tokpack_q.TP_AUC_ORACLE,
+    text_q.ts_ttr_diversity: text_q.TS_TTR_ORACLE,
+    text_q.ts_quality_classifier: text_q._quality_clf_oracle(),
+    text_q.ts_heaps_law: text_q.TS_HEAPS_ORACLE,
+    sim_q.sim_lsh_recall_audit: sim_q._lsh_recall_oracle(),
+    sim_q.sim_index_drift: sim_q._index_drift_oracle,
+    tokpack_q.tp_neyman_allocation: tokpack_q.TP_NEYMAN_ORACLE,
+    dedup_q.dd_lsh_tuning_curve: dedup_q._lsh_tuning_oracle(),
+    tokpack_q.tp_sequence_packing: tokpack_q.TP_PACK_ORACLE,
+    tokpack_q.tp_training_mix: tokpack_q.TP_MIX_ORACLE,
+    text_q.ts_pii_scrub: text_q._pii_oracle(),
+    text_q.ts_tfidf_keywords: text_q.TS_TFIDF_ORACLE,
+    dedup_q.dd_dup_clusters: dedup_q.DD_CLUSTERS_ORACLE,
+    dedup_q.dd_line_dedup: dedup_q.DD_LINE_ORACLE,
+    tokpack_q.tp_contamination: tokpack_q.TP_CONTAM_ORACLE,
+    text_q.ts_quality_filters: text_q._quality_filters_oracle(),
+    text_q.ts_repetition_filters: text_q._repetition_oracle(),
+    text_q.ts_unicode_normalize: text_q.TS_UNICODE_ORACLE,
+    text_q.ts_html_extract: text_q.TS_HTML_ORACLE,
+    text_q.ts_url_parse: text_q.TS_URL_ORACLE,
+    sim_q.sim_feature_hash: sim_q.SIM_FH_ORACLE,
+    text_q.ts_countmin_sketch: text_q._cm_oracle(),
+    tokpack_q.tp_rag_pipeline: tokpack_q._rag_oracle(),
+    text_q.ts_ngram_lm: text_q.TS_LM_ORACLE,
+    tokpack_q.tp_dataset_card: tokpack_q.TP_CARD_ORACLE,
+    tokpack_q.tp_curriculum_order: tokpack_q.TP_CURRICULUM_ORACLE,
+    text_q.ts_source_similarity: text_q.TS_SRC_SIM_ORACLE,
+    tokpack_q.tp_bpe_pair_counts: tokpack_q.TP_BPE_ORACLE,
+    tokpack_q.tp_token_ids: tokpack_q.TP_TOKEN_IDS_ORACLE,
+    tokpack_q.tp_doc_chunking: tokpack_q.TP_CHUNK_ORACLE,
+    tokpack_q.tp_source_caps: tokpack_q.TP_SOURCE_CAPS_ORACLE,
+    mm_q.mm_wav_meta: mm_q.MM_WAV_ORACLE,
+    mm_q.mm_audio_stats: mm_q.MM_AUDIO_ORACLE,
+    mm_q.mm_audio_spectral: mm_q.MM_SPECTRAL_ORACLE,
+    mm_q.mm_gif_roundtrip: mm_q.MM_GIF_ORACLE,
+    mm_q.mm_mp4_frame_stats: mm_q.MM_MP4_FRAMES_ORACLE,
+    text_q.ts_lm_doc_score: text_q.TS_LM_SCORE_ORACLE,
+    tokpack_q.tp_vocab_coverage: tokpack_q.TP_VOCAB_COV_ORACLE,
+    tokpack_q.tp_temperature_mix: tokpack_q.TP_TEMP_MIX_ORACLE,
+    mm_q.mm_phash_dedup: mm_q._phash_oracle,
+    tokpack_q.tp_span_corruption: tokpack_q.TP_SPAN_ORACLE,
+    tokpack_q.tp_detokenize_roundtrip: tokpack_q.TP_DETOK_ORACLE,
+    mm_q.mm_silence_trim: mm_q.MM_SILENCE_ORACLE,
+    dedup_q.dd_url_canonical: dedup_q.DD_URL_ORACLE,
+    tokpack_q.tp_length_buckets: tokpack_q.TP_LENBUCKET_ORACLE,
+    tokpack_q.tp_train_val_split: tokpack_q.TP_SPLIT_ORACLE,
+    text_q.ts_novel_ngrams: text_q.TS_NOVEL_ORACLE,
+    mm_q.mm_patchify: mm_q._patchify_oracle,
+    mm_q.mm_image_norm: mm_q.MM_IMGNORM_ORACLE,
+    text_q.ts_c4_filters: text_q.TS_C4_ORACLE,
+    text_q.ts_char_gini: text_q.TS_GINI_ORACLE,
+    tokpack_q.tp_tokenizer_fertility: tokpack_q.TP_FERTILITY_ORACLE,
+    dedup_q.dd_prefix_clusters: dedup_q.DD_PREFIX_ORACLE,
+    sim_q.sim_knn_accuracy: sim_q.SIM_KNN_ORACLE,
+    tokpack_q.tp_dsir_weights: tokpack_q.TP_DSIR_ORACLE,
+    sim_q.sim_label_centroids: sim_q.SIM_CENTROID_ORACLE,
+    corpus_misc_q.src_binary_ingest: corpus_misc_q._binary_oracle,
+    dedup_q.dd_cluster_keep_best: dedup_q.DD_KEEPBEST_ORACLE,
+    tokpack_q.tp_mixture_epochs: tokpack_q.TP_EPOCHS_ORACLE,
+    text_q.ts_lang_confusion: text_q._lang_confusion_oracle,
+    sim_q.sim_ivf_recall_audit: sim_q._ivf_recall_oracle,
+    sim_q.sim_kmeans_inertia: sim_q._kmeans_inertia_oracle,
+    corpus_misc_q.j16_point_in_time_join: corpus_misc_q.J16_ORACLE,
+    tokpack_q.tp_sft_format: tokpack_q.TP_SFT_ORACLE,
+    mm_q.mm_audio_vad_segments: mm_q.MM_VAD_ORACLE,
+    sim_q.sim_kcenter_diversity: sim_q._kcenter_oracle,
+    sim_q.sim_pq_recall_audit: sim_q._pq_recall_oracle,
+    dedup_q.dd_semantic_dedup: dedup_q.DD_SEMANTIC_ORACLE,
+    tokpack_q.tp_shard_shuffle: tokpack_q.TP_SHARD_ORACLE,
+    text_q.ts_bigram_commonality: text_q.TS_BIGRAM_ORACLE,
+    mm_q.mm_mp4_meta: mm_q.MM_MP4_ORACLE,
+    streaming.st_windowed_topk: streaming.ST_TOPK_ORACLE,
+    streaming.st_windowed_cardinality: streaming.ST_CARDINALITY_ORACLE,
+    streaming.st_windowed_quantile_sketch: streaming.ST_WINDOWED_QUANTILE_ORACLE,
+    streaming.st_windowed_distinct_sketch: streaming.ST_KMV_DISTINCT_ORACLE,
+    streaming.st_windowed_events: streaming.ST_WINDOW_ORACLE,
+    streaming.st_sliding_windows: streaming.ST_SLIDING_ORACLE,
+    streaming.st_sessionize: streaming.ST_SESSION_ORACLE,
+    streaming.st_session_window: streaming.ST_SESSION_WINDOW_ORACLE,
+    streaming.st_running_totals: streaming.ST_RUNNING_TOTALS_ORACLE,
+    streaming.st_stream_dedup: streaming.ST_DEDUP_ORACLE,
+    streaming.st_late_arrival_audit: streaming.ST_LATE_ORACLE,
+    streaming.st_interarrival_stats: streaming.ST_INTERARRIVAL_ORACLE,
+    streaming.st_event_rate_alerts: streaming.ST_RATE_ALERTS_ORACLE,
+    streaming.st_new_user_rate: streaming.ST_NEW_USER_ORACLE,
+    streaming.st_silence_gaps: streaming.ST_SILENCE_ORACLE,
+    quality.q_pk_uniqueness_audit: quality.Q_PK_AUDIT_ORACLE,
+    quality.q_quality_report: quality.QUALITY_ORACLE,
+    quality.q_table_stats: quality._table_stats_oracle(),
+    quality.q_table_stats_approx: quality._table_stats_approx_oracle(),
+    quality.q_encoding_profile: quality._encoding_profile_oracle(),
+    quality.q_referential_integrity: quality.Q_REFINT_ORACLE,
+    quality.q_violation_bitmask: quality.Q_BITMASK_ORACLE,
+    flights.fl_daily_airline_mart: flights.FL_MART_ORACLE,
+    flights.fl_fact_star: flights.FL_FACT_ORACLE,
+    sketch_q.j19_advised_join: sketch_q.J19_ORACLE,
+    sketch_q.q_join_skew_advisor: sketch_q.Q_JOIN_SKEW_ADVISOR_ORACLE,
+    sketch_q.j20_skew_advised_join: sketch_q.J20_ORACLE,
+    sketch_q.a42_advised_mart_layout: sketch_q.A42_ORACLE,
+    sketch_q.q_range_partition_advisor: sketch_q.Q_RANGE_ADVISOR_ORACLE,
+    sketch_q.x13_advised_range_layout: sketch_q.X13_ORACLE,
+    agg_q.daily_segment_performance: agg_q.FLAGSHIP_ORACLE,
+    join_q.j1_enrich_lookup_join: join_q.J1_ORACLE,
+    join_q.j2_star_fact_build: join_q.J2_ORACLE,
+    join_q.j4_outer_merge_daily_flow: join_q.J4_ORACLE,
+    join_q.j7_anti_customers_without_orders: join_q.J7_ORACLE,
+    agg_q.a3_global_summary: agg_q.A3_ORACLE,
+    agg_q.a4_distinct_dim: agg_q.A4_ORACLE,
+    agg_q.a5_topk_parts: agg_q.A5_ORACLE,
+    agg_q.a7_grouped_dim_supplier: agg_q.A7_ORACLE,
+    join_q.u1_union_distinct_nations: join_q.U1_ORACLE,
+    funcs_q.o3_date_dim: funcs_q.O3_ORACLE,
+    funcs_q.p4_conditional_cleaning: funcs_q.P4_ORACLE,
+    funcs_q.f_string_suite: funcs_q.F_STRING_ORACLE,
+    funcs_q.f_datetime_suite: funcs_q.F_DATETIME_ORACLE,
+    window_q.w1_topk_per_group: window_q.W1_ORACLE,
+    funcs_q.f_json_suite: funcs_q.F_JSON_ORACLE,
+    funcs_q.f_array_suite: funcs_q.F_ARRAY_ORACLE,
+    join_q.j6_semi_high_value_customers: join_q.J6_ORACLE,
+    join_q.u2_intersect_except_nations: join_q.U2_ORACLE,
+    agg_q.a8_describe_orders: agg_q.A8_ORACLE,
+    agg_q.a9_rollup_segment_status: agg_q.A9_ORACLE,
+    agg_q.a10_cube_returnflag_status: agg_q.A10_ORACLE,
+    agg_q.a11_exact_quantiles: agg_q.A11_ORACLE,
+    agg_q.a12_approx_sketches: agg_q.A12_ORACLE,
+    sketch_q.a19_sketch_rollup: sketch_q.A19_ORACLE,
+    agg_q.a13_pivot_status_by_segment: agg_q.A13_ORACLE,
+    agg_q.a14_unpivot_status_counts: agg_q.A14_ORACLE,
+    join_q.j8_asof_purchase_attribution: join_q.J8_ORACLE,
+    join_q.j9_range_join_price_bands: join_q.J9_ORACLE,
+    window_q.w2_window_suite: window_q.W2_ORACLE,
+    funcs_q.s1_deterministic_sample: funcs_q.S1_ORACLE,
+    funcs_q.f_map_suite: funcs_q.F_MAP_ORACLE,
+    join_q.j10_regional_revenue: join_q.J10_ORACLE,
+    join_q.j11_clickstream_interval_join: join_q.J11_ORACLE,
+    agg_q.a15_grouping_sets: agg_q.A15_ORACLE,
+    join_q.j12_lateral_topk_orders: join_q.J12_ORACLE,
+    join_q.u3_multiset_ops: join_q.U3_ORACLE,
+    funcs_q.p5_null_handling: funcs_q.P5_ORACLE,
+    funcs_q.f_explode_suite: funcs_q.F_EXPLODE_ORACLE,
+    agg_q.a16_collection_aggs: agg_q.A16_ORACLE,
+    agg_q.a17_bitwise_bool_aggs: agg_q.A17_ORACLE,
+    funcs_q.p6_grouped_minmax_scale: funcs_q.P6_ORACLE,
+    funcs_q.f_udtf_shingles: funcs_q.F_UDTF_ORACLE,
+    funcs_q.f_variant_suite: funcs_q.F_VARIANT_ORACLE,
+    funcs_q.o4_recursive_month_spine: funcs_q.O4_ORACLE,
+    join_q.dd_fuzzy_name_pairs: join_q.DD_FUZZY_ORACLE,
+    funcs_q.f_datetime_suite2: funcs_q.F_DATETIME2_ORACLE,
+    funcs_q.f_array_suite2: funcs_q.F_ARRAY2_ORACLE,
+    funcs_q.p7_try_functions: funcs_q.P7_ORACLE,
+    funcs_q.f_string_suite2: funcs_q.F_STRING2_ORACLE,
+    funcs_q.f_xml_suite: funcs_q.F_XML_ORACLE,
+    window_q.w3_time_range_window: window_q.W3_ORACLE,
+    window_q.w4_scd2_history: window_q.W4_ORACLE,
+    window_q.w5_gapfill_resample: window_q.W5_ORACLE,
+    window_q.w6_forward_fill: window_q.W6_ORACLE,
+    window_q.w7_event_funnel: window_q.W7_ORACLE,
+    window_q.w8_rolling_anomaly: window_q.W8_ORACLE,
+    audit_q.x7_zorder_layout: audit_q._zorder_oracle,
+    window_q.w9_cohort_retention: window_q.W9_ORACLE,
+    window_q.w10_markov_transitions: window_q.W10_ORACLE,
+    agg_q.a20_equidepth_histogram: agg_q._equidepth_oracle,
+    agg_q.a21_pearson_corr: agg_q.A21_ORACLE,
+    window_q.w11_rank_suite: window_q.W11_ORACLE,
+    join_q.g1_bipartite_rank: join_q.G1_ORACLE,
+    agg_q.a22_copurchase_lift: agg_q.A22_ORACLE,
+    funcs_q.p8_winsorize: funcs_q.P8_ORACLE,
+    window_q.w12_ewma_smoothing: window_q.W12_ORACLE,
+    agg_q.a23_mad_robust_stats: agg_q.A23_ORACLE,
+    funcs_q.o7_id_continuity: funcs_q.O7_ORACLE,
+    window_q.w13_activity_bitmap: window_q.W13_ORACLE,
+    window_q.w14_holt_forecast: window_q.W14_ORACLE,
+    agg_q.a24_theil_sen: agg_q.A24_ORACLE,
+    join_q.j17_interval_align: join_q.J17_ORACLE,
+    join_q.g2_triangle_count: join_q.G2_ORACLE,
+    window_q.w17_holt_winters: window_q.W17_ORACLE,
+    agg_q.a26_chi2_independence: agg_q.A26_ORACLE,
+    funcs_q.src_csv_badrecords: funcs_q.SRC_BADREC_ORACLE,
+    agg_q.a27_bootstrap_ci: agg_q.A27_ORACLE,
+    audit_q.q_order_reconciliation: audit_q.Q_RECON_ORACLE,
+    window_q.w18_anomaly_ensemble: window_q.W18_ORACLE,
+    window_q.w19_autocorrelation: window_q.W19_ORACLE,
+    agg_q.a28_mutual_information: agg_q.A28_ORACLE,
+    join_q.g3_kcore_decompose: join_q._g3_oracle(),
+    window_q.w20_attribution: window_q.W20_ORACLE,
+    audit_q.q_freshness_audit: audit_q.Q_FRESHNESS_ORACLE,
+    agg_q.a29_nation_gini: agg_q.A29_ORACLE,
+    agg_q.a30_weighted_median: agg_q.A30_ORACLE,
+    audit_q.x8_snapshot_diff: audit_q.X8_ORACLE,
+    funcs_q.o9_dense_rank_ids: funcs_q.O9_ORACLE,
+    audit_q.x9_bucketed_join: audit_q.X9_ORACLE,
+    audit_q.q_skew_report: audit_q.Q_SKEW_ORACLE,
+    join_q.g4_label_propagation: join_q._g4_oracle(),
+    agg_q.a31_ks_drift: agg_q.A31_ORACLE,
+    agg_q.a32_wasserstein_drift: agg_q.A32_ORACLE,
+    agg_q.a33_welch_t_drift: agg_q.A33_ORACLE,
+    join_q.j18_salted_skew_join: join_q.J18_ORACLE,
+    funcs_q.o10_systematic_sample: funcs_q.O10_ORACLE,
+    agg_q.a34_cramers_v: agg_q.A34_ORACLE,
+    join_q.g5_neighbor_overlap: join_q.G5_ORACLE,
+    audit_q.x10_partition_pruned_scan: audit_q.X10_ORACLE,
+    agg_q.a35_quantile_drift: agg_q.A35_ORACLE,
+    window_q.w21_rolling_quantile: window_q.W21_ORACLE,
+    sketch_q.a38_kll_quantile_sketch: sketch_q.A38_ORACLE,
+    sketch_q.w23_sketch_rolling_quantile: sketch_q.W23_ORACLE,
+    sketch_q.a39_mg_topk_sketch: sketch_q.A39_ORACLE,
+    sketch_q.w24_mg_rolling_topk: sketch_q.W24_ORACLE,
+    sketch_q.a40_kmv_distinct_sketch: sketch_q.A40_ORACLE,
+    sketch_q.w25_kmv_rolling_distinct: sketch_q.W25_ORACLE,
+    sketch_q.o11_universe_sample: sketch_q.O11_ORACLE,
+    sketch_q.x11_incremental_mart: sketch_q.X11_ORACLE,
+    sketch_q.x12_sketch_mart_maintenance: sketch_q.X12_ORACLE,
+    sketch_q.a41_sampled_kmv_crosscheck: sketch_q.A41_ORACLE,
+    sketch_q.w26_mart_rolling_distinct: sketch_q.W26_ORACLE,
+    sketch_q.q_groupby_cardinality_advisor: sketch_q.Q_GROUPBY_ADVISOR_ORACLE,
+    sketch_q.q_join_cardinality_advisor: sketch_q.Q_JOIN_ADVISOR_ORACLE,
+    window_q.w22_period_over_period: window_q.W22_ORACLE,
+    funcs_q.f_sql_udf: funcs_q.F_SQL_UDF_ORACLE,
+    funcs_q.f_param_sql: funcs_q.F_PARAM_SQL_ORACLE,
+    funcs_q.f_udtf_partitioned: funcs_q.F_UDTF2_ORACLE,
+    agg_q.a36_boxplot_profile: agg_q.A36_ORACLE,
+    agg_q.a37_anova_oneway: agg_q.A37_ORACLE,
+    agg_q.a25_hhi_concentration: agg_q.A25_ORACLE,
+    window_q.w15_changepoint_cusum: window_q.W15_ORACLE,
+    window_q.w16_seasonal_decompose: window_q.W16_ORACLE,
+    funcs_q.ts_readability: funcs_q.TS_READ_ORACLE,
+    funcs_q.o5_benford_audit: funcs_q._benford_oracle,
+    funcs_q.p9_standardize: funcs_q.P9_ORACLE,
+    join_q.u4_union_schema_evolution: join_q.U4_ORACLE,
+    agg_q.a18_stat_moments: agg_q.A18_ORACLE,
+    join_q.j13_nullsafe_join: join_q.J13_ORACLE,
+}
+_BUILDERS = {fn.__name__: fn for fn in _CATALOG}
+if len(_BUILDERS) != len(_CATALOG):
+    _names = [fn.__name__ for fn in _CATALOG]
+    _dups = sorted({n for n in _names if _names.count(n) > 1})
+    raise ValueError(f"duplicate _CATALOG query names: {_dups}")
 
 #: Names pulled to the FRONT of the registry, in this order. The driver's
 #: correctness harness samples a bounded prefix of the catalog (the head
@@ -40,7 +376,7 @@ _MODULES = (llm, streaming, quality, flights, relational)
 #: per round by tools/rotation_plan.py; every catalog entry has >=1
 #: lifetime green driver row, and the full catalog is locally
 #: oracle-swept at three SFs each round regardless). Entries not listed
-#: keep their module registration order below the fold. Per-round
+#: keep their ``_CATALOG`` order below the fold. Per-round
 #: rotation rationale lives in git history:
 #: `git log -L :_PRIORITY:us_dot_flights_lakehouse_spark/queries/__init__.py`.
 _PRIORITY = (
@@ -130,32 +466,28 @@ if len(_PRIORITY) != len(set(_PRIORITY)):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for m in _MODULES:
-        merged.update(m.QUERIES)
     # a typo'd _PRIORITY name would otherwise silently demote that query
     # out of the driver's head-50 sample — fail loudly instead, same
     # posture as the duplicate guard above (ADVICE r11 / review r12)
-    unknown = [n for n in _PRIORITY if n not in merged]
+    unknown = [n for n in _PRIORITY if n not in _BUILDERS]
     if unknown:
-        raise ValueError(f"_PRIORITY names not in any QUERIES module: {unknown}")
-    out = {n: merged[n] for n in _PRIORITY}
-    out.update(merged)
+        raise ValueError(f"_PRIORITY names not in _CATALOG: {unknown}")
+    out = {n: _BUILDERS[n] for n in _PRIORITY}
+    out.update(_BUILDERS)
     return out
 
 
 def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
-    for m in _MODULES:
-        for name, sql in m.ORACLES.items():
-            if callable(sql):
-                # data-dependent oracle (e.g. sim_ivf_topk's literal
-                # centroids, re-trained from the parquet): build lazily;
-                # if the data isn't reachable, fall back to a rows-only
-                # check by omitting the entry.
-                try:
-                    sql = sql()
-                except Exception:
-                    continue
-            out[name] = sql
+    for fn, sql in _CATALOG.items():
+        if callable(sql):
+            # data-dependent oracle (e.g. sim_ivf_topk's literal
+            # centroids, re-trained from the parquet): build lazily;
+            # if the data isn't reachable, fall back to a rows-only
+            # check by omitting the entry.
+            try:
+                sql = sql()
+            except Exception:
+                continue
+        out[fn.__name__] = sql
     return out

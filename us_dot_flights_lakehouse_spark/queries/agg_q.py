@@ -1,7 +1,7 @@
 """Aggregate / statistics queries (a*, daily_*): grouped aggs, drift, robust stats.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+Shared constants live in ``relational_shared``; the package ``__init__`` registers
+the queries and states the cross-engine determinism contract.
 """
 
 from __future__ import annotations
@@ -1387,7 +1387,10 @@ def a24_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r_name",
         n.cast("long").alias("n_months"),
         m.cast("long").alias("n_pairs"),
-        F.when(
+        # a single-month region has no pairs: NULL slope (the even branch
+        # would index element 0, which Spark rejects)
+        F.when(m == 0, F.lit(None).cast("double"))
+        .when(
             m % 2 == 1,
             F.element_at(slopes, ((m + 1) / 2).cast("int")),
         )
@@ -1424,12 +1427,12 @@ WITH monthly AS (
   SELECT r_name, count(*) AS n_months FROM monthly GROUP BY 1
 )
 SELECT m.r_name, CAST(m.n_months AS BIGINT) AS n_months,
-       CAST(len(slopes) AS BIGINT) AS n_pairs,
+       CAST(coalesce(len(slopes), 0) AS BIGINT) AS n_pairs,
        CASE WHEN len(slopes) % 2 = 1
             THEN slopes[(len(slopes) + 1) // 2]
             ELSE (slopes[len(slopes) // 2] + slopes[len(slopes) // 2 + 1]) / 2.0
        END AS ts_slope
-FROM meta m JOIN sl USING (r_name)
+FROM meta m LEFT JOIN sl USING (r_name)
 """
 
 

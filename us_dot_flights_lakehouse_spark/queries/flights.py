@@ -183,13 +183,3 @@ SELECT CAST(strftime(FLIGHT_DATE, '%Y%m%d') AS INTEGER) AS DATE_KEY,
        (SELECT CAST(COUNT(DISTINCT ROUTE_CODE) AS BIGINT) FROM silver) AS n_routes
 FROM silver GROUP BY 1
 """
-
-QUERIES = {
-    "fl_daily_airline_mart": fl_daily_airline_mart,
-    "fl_fact_star": fl_fact_star,
-}
-
-ORACLES: dict[str, str] = {
-    "fl_daily_airline_mart": FL_MART_ORACLE,
-    "fl_fact_star": FL_FACT_ORACLE,
-}

@@ -1,7 +1,7 @@
 """Join / graph / set-op queries (j*, g*, u*): equi/asof/skew joins, graph ops.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+Shared constants live in ``relational_shared``; the package ``__init__`` registers
+the queries and states the cross-engine determinism contract.
 """
 
 from __future__ import annotations

@@ -1,7 +1,16 @@
-"""Shared constants and helpers for the LLM-pipeline query family modules.
+"""Shared constants and helpers for the training-data pipeline query
+families (``dedup_q``, ``sim_q``, ``text_q``, ``tokpack_q``, ``mm_q``,
+``corpus_misc_q``): dedup / similarity / text analysis over the
+``documents`` and ``embeddings`` tables.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+Oracles for MinHash/SimHash are *generated from the same constants* the
+Spark operators use (llm/dedup.py), so the two sides cannot drift. The
+shared 28-bit md5 hash contract is described in functions/text.py.
+
+Thresholds are calibrated to the synthetic corpus (all-unique docs, max
+3-gram Jaccard ≈ 0.037, max pairwise cosine ≈ 0.51) so results are
+non-empty and the full candidate-generation + verification machinery is
+exercised.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Multimodal queries (mm_*): image/audio/video decode, features, frame analytics.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+Shared constants live in ``llm_shared``; the package ``__init__`` registers
+the queries and states the cross-engine determinism contract.
 """
 
 from __future__ import annotations

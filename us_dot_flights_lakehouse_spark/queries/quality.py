@@ -549,23 +549,3 @@ SELECT table_name, pk,
        sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) = 0 AS is_unique
 FROM per_key GROUP BY 1, 2
 """
-
-
-QUERIES = {
-    "q_pk_uniqueness_audit": q_pk_uniqueness_audit,
-    "q_quality_report": q_quality_report,
-    "q_table_stats": q_table_stats,
-    "q_table_stats_approx": q_table_stats_approx,
-    "q_encoding_profile": q_encoding_profile,
-    "q_referential_integrity": q_referential_integrity,
-    "q_violation_bitmask": q_violation_bitmask,
-}
-ORACLES = {
-    "q_pk_uniqueness_audit": Q_PK_AUDIT_ORACLE,
-    "q_quality_report": QUALITY_ORACLE,
-    "q_table_stats": _table_stats_oracle(),
-    "q_table_stats_approx": _table_stats_approx_oracle(),
-    "q_encoding_profile": _encoding_profile_oracle(),
-    "q_referential_integrity": Q_REFINT_ORACLE,
-    "q_violation_bitmask": Q_BITMASK_ORACLE,
-}

@@ -1,7 +1,11 @@
-"""Shared constants and helpers for the relational query family modules.
+"""Shared constants and helpers for the relational query families
+(``agg_q``, ``audit_q``, ``funcs_q``, ``join_q``, ``sketch_q``, ``window_q``).
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+Each query re-expresses a reference pipeline pattern (cited per function)
+against the TPC-H-ish test tables: orders≈flight feed, customer/supplier/
+part/nation≈dims, lineitem≈fact grain. The flagship
+(``agg_q.daily_segment_performance``) mirrors the reference's marquee mart
+``daily_airline_performance.py`` semantics.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Similarity-search queries (sim_*): ANN indexes, recall audits, embedding analytics.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/llm.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+Shared constants live in ``llm_shared``; the package ``__init__`` registers
+the queries and states the cross-engine determinism contract.
 """
 
 from __future__ import annotations
@@ -605,9 +605,8 @@ def sim_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition by doc_id, which satisfies BOTH downstream groupings
     ((doc, bucket) ⊇ doc), so neither aggregate re-shuffles. The vector
     serializes to a CSV string in the final select — the driver's
-    canonicalizer requires scalar cells (see queries/relational.py's
-    harness note) — with full fidelity: every component, in order,
-    exact integers. The fixed dimensionality regardless of vocabulary
+    canonicalizer requires scalar cells — with full fidelity: every
+    component, in order, exact integers. The fixed dimensionality regardless of vocabulary
     is the point at 100 TB: no vocab table, bounded state (≤{FH_DIM}
     rows/doc after the map-side combine), stream-friendly."""
     docs = read_table(spark, sf_dir, "documents")

@@ -851,40 +851,3 @@ SELECT day, n_events, exact_users, n_hashes, est_users,
          / CAST(exact_users AS DOUBLE) AS rel_err
 FROM exact JOIN est USING (day)
 """
-
-
-QUERIES = {
-    "st_windowed_topk": st_windowed_topk,
-    "st_windowed_cardinality": st_windowed_cardinality,
-    "st_windowed_quantile_sketch": st_windowed_quantile_sketch,
-    "st_windowed_distinct_sketch": st_windowed_distinct_sketch,
-    "st_windowed_events": st_windowed_events,
-    "st_sliding_windows": st_sliding_windows,
-    "st_sessionize": st_sessionize,
-    "st_session_window": st_session_window,
-    "st_running_totals": st_running_totals,
-    "st_stream_dedup": st_stream_dedup,
-    "st_late_arrival_audit": st_late_arrival_audit,
-    "st_interarrival_stats": st_interarrival_stats,
-    "st_event_rate_alerts": st_event_rate_alerts,
-    "st_new_user_rate": st_new_user_rate,
-    "st_silence_gaps": st_silence_gaps,
-}
-
-ORACLES = {
-    "st_windowed_topk": ST_TOPK_ORACLE,
-    "st_windowed_cardinality": ST_CARDINALITY_ORACLE,
-    "st_windowed_quantile_sketch": ST_WINDOWED_QUANTILE_ORACLE,
-    "st_windowed_distinct_sketch": ST_KMV_DISTINCT_ORACLE,
-    "st_windowed_events": ST_WINDOW_ORACLE,
-    "st_sliding_windows": ST_SLIDING_ORACLE,
-    "st_sessionize": ST_SESSION_ORACLE,
-    "st_session_window": ST_SESSION_WINDOW_ORACLE,
-    "st_running_totals": ST_RUNNING_TOTALS_ORACLE,
-    "st_stream_dedup": ST_DEDUP_ORACLE,
-    "st_late_arrival_audit": ST_LATE_ORACLE,
-    "st_interarrival_stats": ST_INTERARRIVAL_ORACLE,
-    "st_event_rate_alerts": ST_RATE_ALERTS_ORACLE,
-    "st_new_user_rate": ST_NEW_USER_ORACLE,
-    "st_silence_gaps": ST_SILENCE_ORACLE,
-}

@@ -1,7 +1,7 @@
 """Window / time-series queries (w*): rolling, ranking, forecasting, funnels.
 
-Mechanically split out of ``us_dot_flights_lakehouse_spark/queries/relational.py`` (round 13); see that module's
-docstring for the family-wide determinism contract.
+Shared constants live in ``relational_shared``; the package ``__init__`` registers
+the queries and states the cross-engine determinism contract.
 """
 
 from __future__ import annotations
@@ -415,8 +415,11 @@ def w8_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         # prefix totals just BEFORE each user's first row
         p_c = c[ostart] - dense[ostart]
         p_sq = csq[ostart] - dense[ostart] * dense[ostart]
-        lag_c = np.where(t >= 24, c[np.arange(total) - 24], p_c[seg_id])
-        lag_sq = np.where(t >= 24, csq[np.arange(total) - 24], p_sq[seg_id])
+        # clamped gather: np.where evaluates both arms, and a bucket whose
+        # spines total < 24 hours would index before the array start
+        lag_i = np.maximum(np.arange(total) - 24, 0)
+        lag_c = np.where(t >= 24, c[lag_i], p_c[seg_id])
+        lag_sq = np.where(t >= 24, csq[lag_i], p_sq[seg_id])
         s_c = c - lag_c
         sq_c = csq - lag_sq
         # checked precondition (ADVICE r5): the int64 prefix sums may wrap

@@ -480,6 +480,17 @@ def test_mg_loads_rejects_undersized_cap():
         mg_loads(blob, sk["d"], sk["n"], 4)
 
 
+def test_priority_registry_unique_and_resolvable():
+    """ADVICE r10: _PRIORITY must carry no duplicates (hand-counting the
+    driver's head-50 budget depends on it) and every name must resolve."""
+    from us_dot_flights_lakehouse_spark import queries as qreg
+
+    assert len(qreg._PRIORITY) == len(set(qreg._PRIORITY))
+    merged = qreg.queries()
+    missing = [n for n in qreg._PRIORITY if n not in merged]
+    assert not missing, f"_PRIORITY names with no implementation: {missing}"
+
+
 # ---------------------------------------------------------------------------
 # KMV (bottom-k) distinct-count sketch
 # ---------------------------------------------------------------------------
